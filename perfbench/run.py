@@ -4,12 +4,11 @@
     python3 perfbench/run.py --workload pdq_months --seed 1 --seconds 20 --trace 0
 
 Run from the root of a checkout. The first call builds the library and the
-harness with sbt (offline, from the local caches), records the runtime
-classpath and writes a class-data archive from a short training run; later
-calls rebuild only when a source or build file changed.
+harness with sbt (offline, from the local caches) and records the runtime
+classpath; later calls rebuild only when a source or build file changed.
 Each run is one fresh JVM. Everything the benchmark writes goes under
-`.perfbench/` in the checkout: the build stamp, a cache of the fixed corpus,
-span files of traced runs, per-run logs, and the run's scratch directory,
+`.perfbench/` in the checkout: the build stamp, the stream replay input,
+span files of traced runs, per-run logs, and the run's work directory,
 which is removed when the run ends.
 """
 import argparse
@@ -82,20 +81,19 @@ def run_bounded(cmd, cwd, timeout, log, env=None):
     return p.returncode, out
 
 
-def java_cmd(classpath, tmp, archive_opt):
+def java_cmd(classpath, tmp):
     java = os.path.join(os.environ["JAVA_HOME"], "bin", "java") \
         if "JAVA_HOME" in os.environ else "java"
     cmd = [java, f"-Xmx{HEAP}", f"-Djava.io.tmpdir={tmp}",
-           "-Xlog:disable", "-Xlog:all=warning:stderr", archive_opt]
+           "-Xlog:disable", "-Xlog:all=warning:stderr"]
     for p in ADD_OPENS:
         cmd += ["--add-opens", f"{p}=ALL-UNNAMED"]
     return cmd + ["-cp", classpath]
 
 
 def build(root, state):
-    """Compile library + harness if needed and write the class archive;
-    return the runtime classpath (jars) and the JVM flag that maps the
-    archive."""
+    """Compile library + harness if needed; return the runtime classpath
+    (jars)."""
     os.makedirs(state, exist_ok=True)
     stamp = os.path.join(state, "build.json")
     with open(os.path.join(state, "build.lock"), "w") as lock:
@@ -105,7 +103,7 @@ def build(root, state):
             with open(stamp) as fh:
                 known = json.load(fh)
             if known.get("fingerprint") == fp:
-                return known["classpath"], known["archive_opt"]
+                return known["classpath"]
         env = dict(os.environ)
         env.setdefault("COURSIER_MODE", "offline")
         repos = os.path.expanduser(os.path.join("~", ".sbt", "repositories"))
@@ -122,26 +120,9 @@ def build(root, state):
         if code != 0 or not lines or ".jar" not in lines[-1]:
             fail(f"build failed (exit {code}); see {log}")
         classpath = lines[-1].strip()
-        # Class-data archive of a short training run: every run then maps
-        # Spark's classes instead of loading them from the jars. Without an
-        # archive the runs still work, only their set-up is slower.
-        archive = os.path.join(state, "classes.jsa")
-        if os.path.exists(archive):
-            os.remove(archive)
-        train = os.path.join(state, "train")
-        tmp = os.path.join(train, "tmp")
-        os.makedirs(tmp, exist_ok=True)
-        code, _ = run_bounded(
-            java_cmd(classpath, tmp, f"-XX:ArchiveClassesAtExit={archive}")
-            + ["perfbench.Train", train, os.path.join(state, "cache")],
-            root, BUILD_TIMEOUT_S, log)
-        shutil.rmtree(train, ignore_errors=True)
-        archive_opt = f"-XX:SharedArchiveFile={archive}" \
-            if code == 0 and os.path.exists(archive) else "-Xshare:auto"
         with open(stamp, "w") as fh:
-            json.dump({"fingerprint": fp, "classpath": classpath,
-                       "archive_opt": archive_opt}, fh)
-        return classpath, archive_opt
+            json.dump({"fingerprint": fp, "classpath": classpath}, fh)
+        return classpath
 
 
 def main():
@@ -160,7 +141,7 @@ def main():
         fail("run from the root of a checkout: build.sbt and "
              "src/main/scala/graft are missing here")
     state = os.path.join(root, ".perfbench")
-    classpath, archive_opt = build(root, state)
+    classpath = build(root, state)
 
     work = os.path.join(state, "runs", str(os.getpid()))
     cache = os.path.join(state, "cache")
@@ -172,11 +153,13 @@ def main():
                        f"{args.workload}-seed{args.seed}-trace{args.trace}.log")
     if os.path.exists(log):
         os.remove(log)
-    cmd = java_cmd(classpath, tmp, archive_opt) + [
-            "perfbench.Main",
-            "--workload", args.workload, "--seed", str(args.seed),
-            "--seconds", str(args.seconds), "--trace", args.trace,
-            "--work", work, "--cache", cache]
+    cmd = java_cmd(classpath, tmp) + [
+        "perfbench.Main",
+        "--workload", args.workload, "--seed", str(args.seed),
+        "--seconds", str(args.seconds), "--trace", args.trace,
+        "--benchmark", os.path.join(root, "BENCHMARK.json"),
+        "--data", os.path.join(HERE, "data", "sf0.01"),
+        "--work", work, "--cache", cache]
     try:
         code, out = run_bounded(cmd, root, RUN_TIMEOUT_S, log)
     finally:

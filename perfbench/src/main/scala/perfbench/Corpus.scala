@@ -4,31 +4,22 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-/** The fixed, read-only corpus the `queries_stream` workload reads: the
-  * TESTDATA.md tables the heavy queries and the stream ops touch
-  * (`documents`, `embeddings`, `orders`, `lineitem`, `events`), at about
-  * the sf0.01 row counts, written as `<dir>/<name>.parquet` so
-  * `SparkEntry.queries` reads them as it reads an sf directory.
+/** The fixed, read-only tables the `queries_stream` workload reads:
+  * `documents`, `events`, `orders` and `lineitem` of the repository's
+  * sf0.01 test data (TESTDATA.md), copied byte for byte into
+  * `perfbench/data/sf0.01` so that a run reads nothing outside its
+  * checkout. `SparkEntry.queries` reads that directory as it reads any sf
+  * directory, and the recorded query hashes ([[Expected]]) hold for
+  * exactly these files.
   *
-  * It is generated from a fixed seed, not the run's seed: the recorded
-  * query hashes ([[Expected]]) hold for exactly this data. A checkout
-  * builds it once; the `_COMPLETE` marker makes later runs reuse it.
+  * The stream replay input and the state bounds derived from it are
+  * written once per checkout under the cache directory; a `_COMPLETE`
+  * marker makes later runs reuse them.
   */
 object Corpus {
-  val DataSeed = 42L
-  val Docs = 500
-  val Vectors = 500
-  val Dim = 64
-  val Orders = 15000
-  val Customers = 1500
-  val Parts = 2000
-  val Suppliers = 100
-  val Events = 10000
-  val Users = 100
 
   /** Stream replay input: StreamingBench's recipe of key-offset copies
     * with the same id strides, at copy counts that keep a batch small.
@@ -38,117 +29,22 @@ object Corpus {
   val DocStride = 10000L
   val EventStride = 1000000L
 
-  private val Vocab = IndexedSeq("key", "agg", "row", "scan", "slow", "fast",
-    "table", "value", "part", "hash", "merge", "batch", "spark", "a", "the",
-    "line", "sort", "window", "small", "data", "column", "join", "customer",
-    "query", "big", "order", "stream", "group", "filter", "vector", "big",
-    "key")
-  private val Langs = IndexedSeq("en", "en", "en", "es", "zh", "de", "fr")
-
   /** State bounds the stream ops must stay within, measured batch-side
     * from the replay input the way StreamingBench measures them.
     */
   final case class Bounds(nDocs: Long, nEvents: Long, near: Long, users: Long)
 
-  def ensure(spark: SparkSession, dir: String): Bounds = {
-    val marker = new File(s"$dir/_COMPLETE")
+  def bounds(spark: SparkSession, data: String, cache: String): Bounds = {
+    val marker = new File(s"$cache/bounds/_COMPLETE")
     if (!marker.exists()) {
-      writeTables(spark, dir)
-      val b = measureBounds(spark, dir)
+      val b = measureBounds(spark, data)
+      marker.getParentFile.mkdirs()
       Files.write(marker.toPath, Seq(b.nDocs, b.nEvents, b.near, b.users)
         .mkString(",").getBytes(StandardCharsets.UTF_8))
     }
     val v = new String(Files.readAllBytes(marker.toPath), StandardCharsets.UTF_8)
       .trim.split(",").map(_.toLong)
     Bounds(v(0), v(1), v(2), v(3))
-  }
-
-  private def save(spark: SparkSession, rows: Seq[Row], schema: StructType,
-                   path: String)(shape: DataFrame => DataFrame): Unit =
-    shape(spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema))
-      .coalesce(1).write.mode("overwrite").parquet(path)
-
-  private def writeTables(spark: SparkSession, dir: String): Unit = {
-    val rnd = new scala.util.Random(DataSeed)
-    // ---- documents: random vocabulary text; every 25th doc is a one-word
-    // edit of a doc seven ids earlier, so the dedup families find clusters
-    val texts = new Array[String](Docs)
-    val docRows = (0 until Docs).map { i =>
-      val words =
-        if (i % 25 == 7) {
-          val w = texts(i - 7).split(' ')
-          w(rnd.nextInt(w.length)) = Vocab(rnd.nextInt(Vocab.size)); w.toSeq
-        } else Seq.fill(10 + rnd.nextInt(70))(Vocab(rnd.nextInt(Vocab.size)))
-      texts(i) = words.mkString(" ")
-      Row(i.toLong, texts(i), Langs(rnd.nextInt(Langs.size)), s"src${i % 20}",
-        texts(i).length.toLong)
-    }
-    save(spark, docRows, StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType))), s"$dir/documents.parquet")(identity)
-
-    // ---- embeddings: three labelled clusters around random centres
-    val centres = Array.fill(3, Dim)(rnd.nextGaussian())
-    val vecRows = (0 until Vectors).map { i =>
-      val label = rnd.nextInt(3)
-      Row(i.toLong, centres(label).map(c => (c + 0.6 * rnd.nextGaussian()).toFloat).toSeq,
-        label)
-    }
-    save(spark, vecRows, StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType, containsNull = false)),
-      StructField("label", IntegerType))), s"$dir/embeddings.parquet")(identity)
-
-    // ---- orders and lineitem: 1-7 lines per order; the order total is
-    // the lines' sum except for a few orders, so reconciliation finds both
-    val day0 = java.time.LocalDate.of(1992, 1, 1).toEpochDay * 86400L
-    val liRows = Seq.newBuilder[Row]
-    val orderRows = (1 to Orders).map { o =>
-      val orderSec = day0 + rnd.nextInt(2400) * 86400L
-      var total = 0.0
-      (1 to 1 + rnd.nextInt(7)).foreach { ln =>
-        val qty = 1 + rnd.nextInt(50)
-        val price = math.round(qty * (900 + rnd.nextInt(1100)) * 100.0 / 10) / 100.0
-        total += price
-        liRows += Row(o.toLong, 1L + rnd.nextInt(Parts), 1L + rnd.nextInt(Suppliers),
-          ln, qty.toDouble, price, rnd.nextInt(11) / 100.0, rnd.nextInt(9) / 100.0,
-          Seq("A", "N", "R")(rnd.nextInt(3)), Seq("O", "F")(rnd.nextInt(2)),
-          orderSec + (1 + rnd.nextInt(121)) * 86400L)
-      }
-      if (o % 97 == 0) total += 10.0
-      Row(o.toLong, 1L + rnd.nextInt(Customers), Seq("O", "F", "P")(rnd.nextInt(3)),
-        math.round(total * 100) / 100.0, orderSec,
-        Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")(rnd.nextInt(5)))
-    }
-    save(spark, orderRows, StructType(Seq(
-      StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
-      StructField("o_orderstatus", StringType), StructField("o_totalprice", DoubleType),
-      StructField("o_orderdate", LongType), StructField("o_orderpriority", StringType))),
-      s"$dir/orders.parquet")(_.withColumn("o_orderdate", timestamp_seconds(col("o_orderdate"))))
-    save(spark, liRows.result(), StructType(Seq(
-      StructField("l_orderkey", LongType), StructField("l_partkey", LongType),
-      StructField("l_suppkey", LongType), StructField("l_linenumber", IntegerType),
-      StructField("l_quantity", DoubleType), StructField("l_extendedprice", DoubleType),
-      StructField("l_discount", DoubleType), StructField("l_tax", DoubleType),
-      StructField("l_returnflag", StringType), StructField("l_linestatus", StringType),
-      StructField("l_shipdate", LongType))),
-      s"$dir/lineitem.parquet")(_.withColumn("l_shipdate", timestamp_seconds(col("l_shipdate"))))
-
-    // ---- events: a month-long click stream over a small user base
-    val ev0 = java.time.LocalDate.of(2024, 1, 1).toEpochDay * 86400L * 1000000L
-    var tsMicros = ev0
-    val evRows = (0 until Events).map { i =>
-      tsMicros += rnd.nextInt(400 * 1000000)
-      Row(i.toLong, tsMicros, rnd.nextInt(Users).toLong,
-        Seq("view", "click", "error", "purchase")(rnd.nextInt(4)),
-        rnd.nextInt(2000) / 100.0, s"""{"k": ${rnd.nextInt(100)}}""")
-    }
-    save(spark, evRows, StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", LongType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType))),
-      s"$dir/events.parquet")(_.withColumn("ts", timestamp_micros(col("ts"))))
   }
 
   /** Key-offset copies of a table (StreamingBench's replication). */
@@ -186,14 +82,14 @@ object Corpus {
   }
 
   /** The replay inputs split into `n` chunks each, written once per
-    * corpus: (documents dir, events dir).
+    * checkout: (documents dir, events dir).
     */
-  def ensureChunks(spark: SparkSession, dir: String, n: Int): (String, String) = {
-    val out = s"$dir/replay-$n"
+  def ensureChunks(spark: SparkSession, data: String, cache: String, n: Int): (String, String) = {
+    val out = s"$cache/replay-$n"
     val marker = new File(s"$out/_COMPLETE")
     if (!marker.exists()) {
-      writeChunks(replayDocs(spark, dir), "doc_id", n, s"$out/docs")
-      writeChunks(replayEvents(spark, dir), "event_id", n, s"$out/events")
+      writeChunks(replayDocs(spark, data), "doc_id", n, s"$out/docs")
+      writeChunks(replayEvents(spark, data), "event_id", n, s"$out/events")
       Files.write(marker.toPath, Array.emptyByteArray)
     }
     (s"$out/docs", s"$out/events")

@@ -1,25 +1,34 @@
 package perfbench
 
-/** Every metric the benchmark prints, with its unit, in the order of
-  * `BENCHMARK.json` (a test checks that the two agree).
-  */
-object Metrics {
-  /** Untraced runs. A unit is a month (`pdq_months`: the timed ladder
-    * months and the re-run month) or a query or stream op
-    * (`queries_stream`).
-    */
-  val endToEnd: Seq[(String, String)] = Seq(
-    "setup_s" -> "s",
-    "ok_ratio" -> "ratio",
-    "total_s" -> "s")
+import java.io.File
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
+/** The metric catalogue: every metric the benchmark prints, with its unit,
+  * in the order `BENCHMARK.json` declares it. [[Run.put]] accepts only
+  * these names.
+  */
+final class Catalogue(val endToEnd: Seq[(String, String)], val perLayer: Seq[(String, String)]) {
+  val units: Map[String, String] = (endToEnd ++ perLayer).toMap
+}
+
+object Catalogue {
+  /** Read the `end_to_end` and `per_layer` lists of a `BENCHMARK.json`. */
+  def load(path: String): Catalogue = {
+    val json = new ObjectMapper().readTree(new File(path))
+    def metrics(key: String): Seq[(String, String)] =
+      json.get(key).elements().asScala.map(m =>
+        m.get("name").asText() -> m.get("unit").asText()).toSeq
+    new Catalogue(metrics("end_to_end"), metrics("per_layer"))
+  }
+}
+
+/** The layers, queries and stream ops the workloads measure. */
+object Metrics {
   val PdqSpans: Seq[String] = Seq("sources.extract", "pdq.staging",
     "pdq.curated.dims", "pdq.curated.facts", "pdq.dq")
-
-  /** The listener set recorded for each span. */
-  val SpanStats: Seq[(String, String)] = Seq(
-    "s" -> "s", "task_s" -> "s", "idle_core_share" -> "share",
-    "jobs" -> "count", "stages" -> "count", "shuffle_mb" -> "MB", "spill_mb" -> "MB")
 
   /** Suffix doubling, connected-component closure, the two similarity-pair
     * generators, and the relational control. Each costs seconds of per-job
@@ -28,42 +37,8 @@ object Metrics {
   val Queries: Seq[String] = Seq("suffix_dup_positions", "winnow_dup_clusters",
     "sparse_cosine_pairs", "setsim_prefix_pairs", "rollup_reconcile")
 
-  val QueryStats: Seq[(String, String)] = Seq(
-    "s" -> "s", "jobs" -> "count", "stages" -> "count", "shuffle_mb" -> "MB",
-    "idle_core_share" -> "share")
-
   /** MinHash near-dup (band buckets in `transformWithState` state) and
     * sessionization (event-time session windows over the events stream).
     */
   val StreamOps: Seq[String] = Seq("neardup", "sessionize")
-
-  val StreamStats: Seq[(String, String)] = Seq(
-    "batch_ms_p50" -> "ms", "addbatch_ms_p50" -> "ms", "planning_ms_p50" -> "ms",
-    "state_commit_ms_p50" -> "ms", "state_rows" -> "rows", "state_mb" -> "MB")
-
-  /** Traced runs. */
-  val perLayer: Seq[(String, String)] =
-    PdqSpans.flatMap(s => SpanStats.map { case (k, u) => s"$s.$k" -> u }) ++ Seq(
-      "sources.extract.rows_scanned" -> "rows",
-      "sources.extract.rows_kept" -> "rows",
-      "sources.extract.rows_rejected" -> "rows",
-      "sources.extract.keep_ratio" -> "ratio",
-      "pdq.staging.rows_collapsed" -> "rows",
-      "pdq.curated.dims.rows_rewritten" -> "rows",
-      "pdq.month_s_p50" -> "s",
-      "pdq.rerun_s" -> "s",
-      "pdq.rows_per_s" -> "1/s",
-      "pdq.bytes_per_input_byte" -> "ratio",
-      "trace.overhead.pdq.unit_s" -> "s") ++
-    Queries.flatMap(q => QueryStats.map { case (k, u) => s"queries.$q.$k" -> u }) ++ Seq(
-      "queries.total_s" -> "s",
-      "memos.trainings" -> "count") ++
-    StreamOps.flatMap(o => StreamStats.map { case (k, u) => s"streaming.$o.$k" -> u }) ++ Seq(
-      "stream.docs_per_s" -> "1/s",
-      "stream.events_per_s" -> "1/s",
-      "stream.batch_ms_p50" -> "ms",
-      "stream.batch_ms_max" -> "ms",
-      "jvm.peak_heap_mb" -> "MB")
-
-  val units: Map[String, String] = (endToEnd ++ perLayer).toMap
 }

@@ -24,10 +24,10 @@ import graft.sources.Dsv
   * leaves every warehouse table's content (without `ingested_at`) as it
   * was.
   *
-  * Traced, each month also runs through [[tracedMonth]] into a second
-  * warehouse, alternating which of the two goes first. Both must give the
-  * same reports and table contents; the difference of their month times
-  * is the tracing overhead.
+  * Traced, the timed pass runs [[tracedMonth]] in place of `runMonth`, so
+  * its units sit where an untraced run's do; then the untraced pass runs,
+  * untimed, into a second warehouse. Both must give the same reports and
+  * table contents.
   */
 object PdqMonths {
   val Shape = PdqGen.Shape(months = 6, operators = 300, leases = 4000,
@@ -38,119 +38,113 @@ object PdqMonths {
 
   private val Measures = Seq("oil_bbl", "gas_mcf", "cond_bbl", "csgd_mcf")
 
+  /** One pass over the ladder into one warehouse: the reports of its
+    * months (None when one threw), the seconds of the warm-up month and of
+    * the timed months, the re-run's report and seconds, and the table
+    * hashes before and after the re-run.
+    */
+  final case class Pass(reports: Seq[Option[DqReport]], warmS: Double, monthS: Seq[Double],
+                        rerun: Option[DqReport], rerunS: Option[Double], whBytes: Double,
+                        before: Map[String, (Long, BigDecimal)],
+                        after: Map[String, (Long, BigDecimal)]) {
+    /** The timed units: the months after the first, then the re-run. */
+    def unitS: Seq[Double] = monthS ++ rerunS
+  }
+
+  /** Run the ladder and the re-run of `again` with `month`, which returns a
+    * month's report and its wall seconds; units are named with `suffix`.
+    */
+  def pass(spark: SparkSession, run: Run, ladder: Seq[PdqGen.MonthPlan],
+           again: PdqGen.MonthPlan, warehouse: String, suffix: String)
+          (month: (Int, String) => (DqReport, Double)): Pass = {
+    def unit(name: String, m: Int): Option[(DqReport, Double)] = {
+      val out = Runner.attempt(run, s"$name$suffix")(month(m, name))
+      out.foreach { case (_, s) => Runner.log(f"$name$suffix $s%.2f s") }
+      out
+    }
+    val (warm, warmS) = Runner.seconds(unit("month0", ladder.head.yyyymm))
+    val months = ladder.zipWithIndex.tail.map { case (p, i) => unit(s"month$i", p.yyyymm) }
+    val whBytes = Runner.dirBytes(new File(warehouse)).toDouble
+    val before = tableHashes(spark, warehouse)
+    val rerun = unit("rerun", again.yyyymm)
+    Pass(warm.map(_._1) +: months.map(_.map(_._1)), warmS, months.flatten.map(_._2),
+      rerun.map(_._1), rerun.map(_._2), whBytes, before, tableHashes(spark, warehouse))
+  }
+
   def run(spark: SparkSession, run: Run, sessionReady: Double): Unit = {
     val ex = PdqGen.write(s"${run.workDir}/export", run.seed, Shape)
+    Runner.log(s"export written: ${ex.dataRows} rows")
     val ladder = ex.months.take(1 + timedMonths(run.seconds))
     // re-run a middle month: one with later months loaded after it
     val mid = (ladder.size - 1) / 2
     val again = ladder(mid)
     val whA = s"${run.workDir}/warehouse"
-    val whB = s"${run.workDir}/warehouse_traced"
+    def untraced(suffix: String) = pass(spark, run, ladder, again, whA, suffix) { (m, _) =>
+      Runner.seconds(Pipeline.runMonth(spark, ex.operatorDsv, ex.leaseDsv, whA, m))
+    }
+
+    // ---- the timed pass; traced, then the untraced one to compare ----
     val tracer = if (run.traced) Some(new Tracer(spark)) else None
-
-    def untraced(m: Int): DqReport =
-      Pipeline.runMonth(spark, ex.operatorDsv, ex.leaseDsv, whA, m)
-    def traced(m: Int, unit: String): Traced =
-      tracedMonth(spark, tracer.get, ex, whB, m, unit)
-
-    // ---- warm-up: the ladder's first month, counted in setup ----
-    val (warm, warmS) = Runner.seconds {
-      Runner.attempt(run, "month0")(untraced(ladder.head.yyyymm)) ->
-        tracer.map(_ => Runner.attempt(run, "month0-traced")(traced(ladder.head.yyyymm, "month0")))
+    val audits = Seq.newBuilder[Audit]
+    val timed = tracer match {
+      case None => untraced("")
+      case Some(tr) =>
+        pass(spark, run, ladder, again, s"${run.workDir}/warehouse_traced", "-traced") {
+          (m, unit) =>
+            val t = tracedMonth(spark, tr, ex, s"${run.workDir}/warehouse_traced", m, unit)
+            if (unit != "month0" && unit != "rerun") audits += t.audit
+            (t.report, t.seconds)
+        }
     }
-    run.put("setup_s", sessionReady + warmS)
-    Runner.log(f"session ${sessionReady}%.1f s, warm-up $warmS%.1f s")
-
-    // ---- timed ladder ----
-    val reports = Array.fill[Option[DqReport]](ladder.size)(None)
-    val tracedOut = Array.fill[Option[Traced]](ladder.size)(None)
-    reports(0) = warm._1
-    tracedOut(0) = warm._2.flatten
-    val monthS = Seq.newBuilder[Double]
-    val tracedS = Seq.newBuilder[Double]
-    ladder.zipWithIndex.tail.foreach { case (p, i) =>
-      val unit = s"month$i"
-      def plain(): Unit = {
-        val (r, s) = Runner.seconds(Runner.attempt(run, unit)(untraced(p.yyyymm)))
-        reports(i) = r
-        if (r.isDefined) monthS += s
-      }
-      def withSpans(): Unit = {
-        tracedOut(i) = Runner.attempt(run, s"$unit-traced")(traced(p.yyyymm, unit))
-        tracedS ++= tracedOut(i).map(_.seconds)
-      }
-      if (tracer.isEmpty) plain()
-      else if (i % 2 == 1) { plain(); withSpans() }
-      else { withSpans(); plain() }
-    }
-    val whBytes = Runner.dirBytes(new File(whA)).toDouble
-
-    // ---- re-run the middle month ----
-    val before = tableHashes(spark, whA)
-    val beforeTraced = tracer.map(_ => tableHashes(spark, whB))
-    // traced runs re-run in the order opposite to the last ladder month's
-    def rerunPlain() = Runner.seconds(Runner.attempt(run, "rerun")(untraced(again.yyyymm)))
-    def rerunTraced() = tracer.flatMap(_ =>
-      Runner.attempt(run, "rerun-traced")(traced(again.yyyymm, "rerun")))
-    val tracedFirst = ladder.size % 2 == 0
-    val earlyTraced = if (tracedFirst) rerunTraced() else None
-    val (rerun, rerunS) = rerunPlain()
-    val rerunT = if (tracedFirst) earlyTraced else rerunTraced()
-    val after = tableHashes(spark, whA)
+    run.put("setup_s", sessionReady + timed.warmS)
+    Runner.log(f"session $sessionReady%.1f s, warm-up ${timed.warmS}%.1f s")
+    val plain = if (run.traced) untraced("") else timed
 
     // ---- output checks ----
     val counts = new Counts(spark, ex, whA)
     ladder.zipWithIndex.foreach { case (p, i) =>
-      reports(i).foreach(_ =>
+      plain.reports(i).foreach(_ =>
         run.unit(s"month$i", counts.monthOk(p) && (i > 0 || counts.rejectedOk)))
-      tracer.foreach { _ =>
-        tracedOut(i).foreach { t =>
-          run.unit(s"month$i-traced", reports(i).contains(t.report))
-        }
-      }
     }
-    rerun.foreach { r =>
-      val same = reports(mid).contains(r) && before == after
+    def rerunOk(p: Pass, name: String): Unit = p.rerun.foreach { r =>
+      val same = plain.reports(mid).contains(r) && p.before == p.after
       if (!same)
-        Runner.log(s"re-run differs: $r vs ${reports(mid)}; same tables: ${before == after}")
-      run.unit("rerun", same)
+        Runner.log(s"$name differs: $r vs ${plain.reports(mid)}; same tables: ${p.before == p.after}")
+      run.unit(name, same)
     }
-    tracer.foreach { _ =>
-      rerunT.foreach { t =>
-        val afterTraced = tableHashes(spark, whB)
-        val same = reports(mid).contains(t.report) && beforeTraced.contains(afterTraced) &&
-          afterTraced == after
-        if (!same) Runner.log("traced warehouse differs from the untraced one")
-        run.unit("rerun-traced", same)
+    rerunOk(plain, "rerun")
+    if (run.traced) {
+      timed.reports.zip(plain.reports).zipWithIndex.foreach { case ((t, u), i) =>
+        t.foreach(r => run.unit(s"month$i-traced", u.contains(r)))
       }
+      rerunOk(timed, "rerun-traced")
+      val same = timed.after == plain.after
+      if (!same) Runner.log("traced warehouse differs from the untraced one")
+      run.unit("warehouse-traced", same)
     }
+    Runner.log("checks done")
 
     // ---- metrics ----
-    val units = monthS.result() ++ rerun.map(_ => rerunS)
-    run.put("total_s", units.sum)
+    run.put("total_s", timed.unitS.sum)
     tracer.foreach { tr =>
       tr.stop()
       tr.write(s"${run.cacheDir}/traces/pdq_months-seed${run.seed}.jsonl")
-      val timed = tracedOut.toSeq.drop(1).flatten
       putSpanStats(run, tr, (1 until ladder.size).map(i => s"month$i"))
-      val audits = timed.map(_.audit)
-      val scanned = audits.map(_.scanned).sum.toDouble
+      val a = audits.result()
+      val scanned = a.map(_.scanned).sum.toDouble
       run.put("sources.extract.rows_scanned", scanned)
-      run.put("sources.extract.rows_kept", audits.map(_.kept).sum.toDouble)
-      run.put("sources.extract.rows_rejected", audits.map(_.rejected).sum.toDouble)
+      run.put("sources.extract.rows_kept", a.map(_.kept).sum.toDouble)
+      run.put("sources.extract.rows_rejected", a.map(_.rejected).sum.toDouble)
       run.put("sources.extract.keep_ratio",
-        if (scanned > 0) audits.map(_.kept).sum / scanned else 0.0)
-      run.put("pdq.staging.rows_collapsed", audits.map(_.collapsed).sum.toDouble)
-      run.put("pdq.curated.dims.rows_rewritten", audits.map(_.dimRows).sum.toDouble)
-      val ts = tracedS.result()
-      run.put("pdq.month_s_p50", Runner.median(ts))
-      run.put("pdq.rerun_s", rerunT.map(_.seconds).getOrElse(0.0))
-      run.put("pdq.rows_per_s", ladder.tail.map(_.exportRows).sum / math.max(ts.sum, 1e-9))
-      run.put("pdq.bytes_per_input_byte", whBytes / ex.bytes)
-      // paired units ran in alternating order, so JIT warming cancels
-      val pairs = (ts ++ rerunT.map(_.seconds)).zip(units)
-      run.put("trace.overhead.pdq.unit_s",
-        pairs.map { case (t, u) => t - u }.sum / math.max(pairs.size, 1))
+        if (scanned > 0) a.map(_.kept).sum / scanned else 0.0)
+      run.put("pdq.staging.rows_collapsed", a.map(_.collapsed).sum.toDouble)
+      run.put("pdq.curated.dims.rows_rewritten", a.map(_.dimRows).sum.toDouble)
+      run.put("pdq.month_s_p50", Runner.median(timed.monthS))
+      run.put("pdq.rerun_s", timed.rerunS.getOrElse(0.0))
+      run.put("pdq.rows_per_s",
+        ladder.tail.map(_.exportRows).sum / math.max(timed.monthS.sum, 1e-9))
+      run.put("pdq.bytes_per_input_byte", timed.whBytes / ex.bytes)
+      run.put("trace.total_s", timed.unitS.sum)
     }
     run.put("ok_ratio", 1.0 - run.failed.toDouble / math.max(run.attempted, 1))
   }

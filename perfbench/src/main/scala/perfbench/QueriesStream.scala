@@ -24,15 +24,15 @@ import graft.streaming.{NearDupStream, SessionizeStream}
 object QueriesStream {
 
   /** Micro-batches per op for a run of `seconds`. */
-  def batchesPerOp(seconds: Int): Int = math.max(4, seconds / 5)
+  def batchesPerOp(seconds: Int): Int = math.max(4, seconds / 8)
 
   val RocksDb =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  def run(spark: SparkSession, run: Run, sessionReady: Double): Unit = {
-    val corpus = s"${run.cacheDir}/corpus"
-    val bounds = Corpus.ensure(spark, corpus)
-    val (docsIn, eventsIn) = Corpus.ensureChunks(spark, corpus, batchesPerOp(run.seconds))
+  def run(spark: SparkSession, run: Run, corpus: String, sessionReady: Double): Unit = {
+    val bounds = Corpus.bounds(spark, corpus, run.cacheDir)
+    val (docsIn, eventsIn) =
+      Corpus.ensureChunks(spark, corpus, run.cacheDir, batchesPerOp(run.seconds))
     val docSchema = spark.read.parquet(docsIn).schema
     val eventSchema = spark.read.parquet(eventsIn).schema
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDb)
@@ -89,6 +89,8 @@ object QueriesStream {
         run.put(s"${s.name}.idle_core_share", s.idleCoreShare(Session.cores))
       }
       run.put("queries.total_s", queryS.values.sum)
+      run.put("queries.max_s", if (queryS.isEmpty) 0.0 else queryS.values.max)
+      run.put("trace.total_s", units.sum)
       run.put("memos.trainings", trainings.toDouble)
       opRuns.foreach { o =>
         val p = s"streaming.${o.op}"

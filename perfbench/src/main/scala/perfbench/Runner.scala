@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * and failed, and the metric values it measured.
   */
 final class Run(val workload: String, val seed: Long, val seconds: Int,
-                val traced: Boolean, val workDir: String, val cacheDir: String) {
+                val traced: Boolean, val workDir: String, val cacheDir: String,
+                catalogue: Catalogue) {
   private var attemptedUnits = 0
   private var failedUnits = 0
   private val values = mutable.LinkedHashMap.empty[String, Double]
@@ -28,7 +29,7 @@ final class Run(val workload: String, val seed: Long, val seconds: Int,
   }
 
   def put(name: String, value: Double): Unit = {
-    require(Metrics.units.contains(name), s"undeclared metric $name")
+    require(catalogue.units.contains(name), s"undeclared metric $name")
     values(name) = value
   }
 
@@ -40,7 +41,7 @@ final class Run(val workload: String, val seed: Long, val seconds: Int,
     * reach reads 0.
     */
   def resultJson: String = {
-    val declared = if (traced) Metrics.perLayer else Metrics.endToEnd
+    val declared = if (traced) catalogue.perLayer else catalogue.endToEnd
     if (!traced) {
       val missing = declared.map(_._1).filterNot(values.contains)
       require(missing.isEmpty, s"end-to-end metrics not measured: $missing")
@@ -54,7 +55,8 @@ final class Run(val workload: String, val seed: Long, val seconds: Int,
 }
 
 object Runner {
-  def log(msg: String): Unit = System.err.println(s"[perfbench] $msg")
+  /** A progress line on stderr, stamped with seconds since JVM start. */
+  def log(msg: String): Unit = System.err.println(f"[perfbench] $sinceJvmStart%7.1f $msg")
 
   /** A JSON number with all its digits; non-finite values become 0. */
   def num(v: Double): String =

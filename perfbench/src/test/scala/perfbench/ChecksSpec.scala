@@ -11,7 +11,8 @@ class ChecksSpec extends AnyFunSuite {
   private val spark = TestSession.spark
 
   private def newRun(): Run =
-    new Run("queries_stream", 1L, 15, traced = false, TestSession.dir, TestSession.dir)
+    new Run("queries_stream", 1L, 15, traced = false, TestSession.dir, TestSession.dir,
+      TestSession.catalogue)
 
   test("a query whose hash differs from the expected value fails the run") {
     val run = newRun()
@@ -22,7 +23,7 @@ class ChecksSpec extends AnyFunSuite {
     val wrong = (right._1, right._2 + 1)
     QueriesStream.runQuery(spark, run, None, "q_wrong", Some(wrong))(df)
     assert(run.attempted == 2 && run.failed == 1)
-    Metrics.endToEnd.foreach { case (m, _) => run.put(m, 1.0) }
+    TestSession.catalogue.endToEnd.foreach { case (m, _) => run.put(m, 1.0) }
     assert(run.resultJson.startsWith("""{"correct":false,"attempted":2,"failed":1"""))
   }
 

@@ -8,4 +8,6 @@ import org.apache.spark.sql.SparkSession
 object TestSession {
   lazy val dir: String = Files.createTempDirectory("perfbench-test").toString
   lazy val spark: SparkSession = Session.build(s"$dir/spark")
+  /** The repository's catalogue; tests run in the harness's directory. */
+  lazy val catalogue: Catalogue = Catalogue.load("../BENCHMARK.json")
 }
